@@ -593,7 +593,7 @@ def q_engine_replay_multi(spark, sf_dir):
     from debezium_partial_snapshotter_spark.config import PipelineConfig
     from debezium_partial_snapshotter_spark.functions import table_partition
     from debezium_partial_snapshotter_spark.sources.readers import ParquetWalSource
-    from debezium_partial_snapshotter_spark.streaming.multi import (
+    from debezium_partial_snapshotter_spark.streaming.runner import (
         MultiTableIngestRunner,
     )
 

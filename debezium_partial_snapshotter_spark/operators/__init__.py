@@ -1,2 +1,1 @@
-from debezium_partial_snapshotter_spark.operators.dedup import latest_events  # noqa: F401
 from debezium_partial_snapshotter_spark.operators.upsert import apply_batch  # noqa: F401

@@ -5,7 +5,8 @@ WHEN MATCHED AND s.op='d' THEN DELETE / WHEN MATCHED THEN UPDATE /
 WHEN NOT MATCHED AND s.op!='d' THEN INSERT`` — executed as bucketed
 copy-on-write:
 
-1. in-batch dedup to one winner per key (B4, ``latest_events``);
+1. in-batch dedup to one winner per key (B4), folded into the merge's
+   per-key max (step 3);
 2. bucket pruning: only buckets containing incoming keys are read —
    the single most important scale property (an epoch touching 0.1% of
    keys reads/writes ~0.1% of a 100 TB table, never the table);
@@ -43,12 +44,6 @@ from debezium_partial_snapshotter_spark.operators.schema_evolution import (
 )
 from debezium_partial_snapshotter_spark.plans.lake import CommitConflict, LakeTable
 
-#: Diagnostic: how often commit validation had to recount because the
-#: Observation metrics were unavailable (should stay 0 outside the
-#: AQE-folded-empty-write edge case; a nonzero count on the hot path
-#: means epochs are paying a full re-merge).
-OBSERVATION_FALLBACKS = 0
-
 SYSTEM_FIELDS = [
     StructField("_lsn", LongType(), False),
     StructField("_op_rank", IntegerType(), False),
@@ -74,7 +69,6 @@ def apply_batch(
     table: LakeTable,
     events: DataFrame,
     commit_key: str | None = None,
-    dedup_strategy: str = "max_by",
     salt_buckets: int = 0,
     write_mode: str = "cow",
     tie_guard: bool = False,
@@ -102,6 +96,12 @@ def apply_batch(
         UNclaimed partitions would be skipped forever (silent loss);
         the (lsn, op_rank) max-merge keeps re-applying the overlapping
         WAL events idempotent.
+
+    The returned stats carry ``observation_recount``: True when commit
+    validation had to recount because the Observation metrics were
+    unavailable (should stay False outside the AQE-folded-empty-write
+    edge case; True on the hot path means epochs are paying a full
+    re-merge).
     """
     t0 = time.time()
     spark = events.sparkSession
@@ -236,18 +236,19 @@ def apply_batch(
             return None
 
     validate = None
+    recounted = False
     if not tie_guard:
         # winner rows observed during the write must equal the distinct
         # key count; checked AFTER the data files land but BEFORE the
         # manifest swap — a detected tie abandons the commit dir.
         def validate():
+            nonlocal recounted
             pre, keys = _obs_get(obs_pre), _obs_get(obs_keys)
             if pre is not None and keys is not None:
                 return pre["n_rows"] == keys["n_keys"]
             # metrics lost to plan folding: recount explicitly (one
             # extra job, edge case only — never the hot path)
-            global OBSERVATION_FALLBACKS
-            OBSERVATION_FALLBACKS += 1
+            recounted = True
             return winners.count() == maxes.count()
 
     # ---- 5. atomic commit (data + schema + commit key + watermark)
@@ -258,91 +259,55 @@ def apply_batch(
     )
     if write_mode == "mor":
         # keep tombstones: a delta delete must shadow older base rows
-        new_content = winners.withColumn("_bucket", bexpr).observe(
-            obs, F.count(F.lit(1)).alias("rows_live")
-        )
-        try:
-            applied = table.append_deltas(
-                new_content,
-                affected_buckets=affected,
-                commit_key=commit_key,
-                new_schema=with_system(merged) if evolved else None,
-                validate=validate,
-                expected_num_buckets=nb,
-                expected_layout=layout,
-                # snapshot keys are pinned: their events escape the
-                # lsn > watermark replay filter, so only the key blocks
-                # a very late redelivery (see lake.MAX_COMMIT_KEYS)
-                pin_key=watermark_kind == "snapshot",
-                **wm_kwargs,
-            )
-        except CommitConflict:
-            # concurrent rescale: this batch was bucketed under a stale
-            # num_buckets — recompute under the new layout
-            if _merge_retries <= 0:
-                raise
-            return apply_batch(
-                table,
-                events,
-                commit_key=commit_key,
-                dedup_strategy=dedup_strategy,
-                salt_buckets=salt_buckets,
-                write_mode=write_mode,
-                tie_guard=tie_guard,
-                watermark_kind=watermark_kind,
-                _merge_retries=_merge_retries - 1,
-            )
+        new_content, write, cow_kwargs = winners, table.append_deltas, {}
     else:
-        new_content = (
-            winners.where(~F.col("_is_delete"))
-            .drop("_is_delete")
-            .withColumn("_bucket", bexpr)
-            .observe(obs, F.count(F.lit(1)).alias("rows_live"))
+        new_content = winners.where(~F.col("_is_delete")).drop("_is_delete")
+        write = table.replace_buckets
+        cow_kwargs = {"read_version": read_version}
+    try:
+        applied = write(
+            new_content.withColumn("_bucket", bexpr).observe(
+                obs, F.count(F.lit(1)).alias("rows_live")
+            ),
+            affected_buckets=affected,
+            commit_key=commit_key,
+            new_schema=with_system(merged) if evolved else None,
+            validate=validate,
+            expected_num_buckets=nb,
+            expected_layout=layout,
+            # snapshot keys are pinned: their events escape the
+            # lsn > watermark replay filter, so only the key blocks
+            # a very late redelivery (see lake.MAX_COMMIT_KEYS)
+            pin_key=watermark_kind == "snapshot",
+            **cow_kwargs,
+            **wm_kwargs,
         )
-        try:
-            applied = table.replace_buckets(
-                new_content,
-                affected_buckets=affected,
-                commit_key=commit_key,
-                new_schema=with_system(merged) if evolved else None,
-                validate=validate,
-                read_version=read_version,
-                expected_num_buckets=nb,
-                expected_layout=layout,
-                pin_key=watermark_kind == "snapshot",
-                **wm_kwargs,
-            )
-        except CommitConflict:
-            # a concurrent writer committed into our buckets after we
-            # read them (or a rescale changed num_buckets under us):
-            # the merge is stale — re-read and re-merge.
-            if _merge_retries <= 0:
-                raise
-            return apply_batch(
-                table,
-                events,
-                commit_key=commit_key,
-                dedup_strategy=dedup_strategy,
-                salt_buckets=salt_buckets,
-                write_mode=write_mode,
-                tie_guard=tie_guard,
-                watermark_kind=watermark_kind,
-                _merge_retries=_merge_retries - 1,
-            )
+    except CommitConflict:
+        # CoW: a concurrent writer committed into our buckets after we
+        # read them; either mode: a concurrent rescale bucketed this
+        # batch under a stale num_buckets. The merge is stale —
+        # re-read and re-merge under the new layout.
+        if _merge_retries <= 0:
+            raise
+        applied = "conflict"
 
-    if applied == "invalid":
-        # a genuine duplicate-delivery tie: redo with the guard on
-        return apply_batch(
+    if applied in ("conflict", "invalid"):
+        # "invalid" is a genuine duplicate-delivery tie: redo with the
+        # guard on
+        stats = apply_batch(
             table,
             events,
             commit_key=commit_key,
-            dedup_strategy=dedup_strategy,
             salt_buckets=salt_buckets,
             write_mode=write_mode,
-            tie_guard=True,
+            tie_guard=tie_guard or applied == "invalid",
             watermark_kind=watermark_kind,
-            _merge_retries=_merge_retries,
+            _merge_retries=_merge_retries - (applied == "conflict"),
         )
+        stats["observation_recount"] = recounted or stats.get(
+            "observation_recount", False
+        )
+        return stats
     wall = time.time() - t0
     live = _obs_get(obs) if applied else None
     return {
@@ -353,6 +318,7 @@ def apply_batch(
         "watermark_lsn": batch_watermark,
         "schema_evolved": evolved,
         "rows_live": live.get("rows_live") if live is not None else None,
+        "observation_recount": recounted,
         "wall_ms": int(wall * 1000),
     }
 

@@ -21,9 +21,9 @@ operators"):
   envelope's ``after`` struct should be flattened upstream.
 
 This is deliberately the escape hatch: for bounded feeds the stateless
-``latest_events`` (primitive max + hash join) is cheaper — use this
-only when suppression must happen ACROSS micro-batches, which no
-built-in stateless operator can express.
+per-key max inside ``apply_batch`` (primitive max + hash join) is
+cheaper — use this only when suppression must happen ACROSS
+micro-batches, which no built-in stateless operator can express.
 """
 
 from __future__ import annotations
@@ -67,9 +67,9 @@ def latest_events_stateful(
     - **at most n_salt rows per key per batch** reach the sink (one
       per salt that advanced), instead of exactly one. The cross-salt
       final merge is the sink apply's existing per-key (lsn, op_rank)
-      winner resolution (operators/dedup.py B4) — the same place the
-      batch salted aggregate puts its second phase — so the APPLIED
-      state is identical to the unsalted path's (pinned by
+      winner resolution (operators/upsert.py ``apply_batch``, B4) — the
+      same place the batch salted aggregate puts its second phase — so
+      the APPLIED state is identical to the unsalted path's (pinned by
       tests/test_stateful.py::test_stateful_salted_equivalence_hot_key).
       A salt-local winner can be stale relative to the key's global
       max; it loses at the merge, never in the table.

@@ -11,6 +11,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from debezium_partial_snapshotter_spark.config import PipelineConfig
 from debezium_partial_snapshotter_spark.sources.eventlog import (
@@ -21,7 +22,7 @@ from debezium_partial_snapshotter_spark.sources.eventlog import (
     snapshot_read_events,
 )
 from debezium_partial_snapshotter_spark.sources.readers import ParquetWalSource
-from debezium_partial_snapshotter_spark.streaming.multi import (
+from debezium_partial_snapshotter_spark.streaming.runner import (
     MultiTableIngestRunner,
 )
 from tests.test_replay import assert_state_matches
@@ -31,15 +32,15 @@ NB = 4
 TABLES = {"alpha": (11, 1_000_000), "beta": (22, 5_000_000)}
 
 
-def _env(spark, wh):
+def _env(spark, wh, n_segments=2):
     """Two source tables sharing ONE WAL feed (interleaved segments)."""
     log_dir = os.path.join(wh, "source", "wal")
     os.makedirs(log_dir)
     specs, states, sources, wals = {}, {}, {}, {}
     for t, (seed, lsn0) in TABLES.items():
         spec = EventLogSpec(
-            n_docs=50, n_events=200, n_segments=2, seed=seed,
-            num_buckets=NB, table=t, start_lsn=lsn0,
+            n_docs=50, n_events=100 * n_segments, n_segments=n_segments,
+            seed=seed, num_buckets=NB, table=t, start_lsn=lsn0,
         )
         specs[t] = spec
         states[t] = generate_initial_state(spec)
@@ -50,9 +51,9 @@ def _env(spark, wh):
         )
         wals[t] = generate_change_log(spec)  # in-memory; written on demand
 
-    def write_shared_wal():
+    def write_shared_wal(segments=range(n_segments)):
         # interleave: each shared segment carries BOTH tables' events
-        for i in range(2):
+        for i in segments:
             seg = pa.concat_tables([wals[t][i] for t in TABLES])
             pq.write_table(seg, os.path.join(log_dir, f"seg-{i:05d}.parquet"))
 
@@ -173,24 +174,24 @@ def test_multi_table_crash_resumes_same_epoch(spark, tmp_warehouse, monkeypatch)
     must finish the SAME epoch at the SAME shared watermark — alpha's
     per-table key makes its re-apply a no-op, beta commits under the
     crashed epoch's number, and both end at one consistency point."""
-    import debezium_partial_snapshotter_spark.streaming.multi as multi_mod
+    import debezium_partial_snapshotter_spark.streaming.runner as runner_mod
 
     specs, states, sources, _ = _env(spark, tmp_warehouse)
     runner, cfg = _runner(spark, tmp_warehouse, sources)
 
-    real_apply = multi_mod.apply_batch
+    real_apply = runner_mod.apply_batch
 
     def crashing_apply(table, events, commit_key=None, **kw):
         if commit_key and commit_key.endswith(":beta"):
             raise RuntimeError("simulated crash before beta's commit")
         return real_apply(table, events, commit_key=commit_key, **kw)
 
-    monkeypatch.setattr(multi_mod, "apply_batch", crashing_apply)
+    monkeypatch.setattr(runner_mod, "apply_batch", crashing_apply)
     try:
         runner.snapshot_epoch()
     except RuntimeError:
         pass
-    monkeypatch.setattr(multi_mod, "apply_batch", real_apply)
+    monkeypatch.setattr(runner_mod, "apply_batch", real_apply)
 
     alpha_keys = runner.tables["alpha"].committed_keys()
     assert any(k.startswith("p1:snapshot:") for k in alpha_keys)
@@ -278,3 +279,68 @@ def test_multi_table_surfaces_quarantine_counts(spark, tmp_warehouse):
     out = runner.tail_batch()
     assert out["alpha"]["rows_quarantined"] == 3
     assert "rows_quarantined" not in out["beta"]
+
+
+def _expected(specs, states, t):
+    spec = specs[t]
+    return oracle_apply(
+        [snapshot_read_events(states[t], spec.start_lsn, spec)]
+        + generate_change_log(spec)
+    )
+
+
+def test_multi_table_tail_survives_failure_before_epoch_bump(
+    spark, tmp_warehouse, monkeypatch
+):
+    """A failure after beta's tail commit but before the epoch bump (its
+    metrics row raises) must not stall the pipeline: the next tail skips
+    the epoch both tables already committed and applies the new
+    segment, instead of answering duplicate_commit_key forever."""
+    specs, states, sources, write_shared_wal = _env(spark, tmp_warehouse)
+    runner, cfg = _runner(spark, tmp_warehouse, sources)
+    runner.start()
+
+    real_append = runner.metrics.append
+    failed = []
+
+    def append_failing_once(rows):
+        last = rows[-1]
+        if not failed and last["partition"] == "beta/*" and last["phase"] == "tail":
+            failed.append(rows)
+            raise RuntimeError("simulated failure after beta's tail commit")
+        return real_append(rows)
+
+    monkeypatch.setattr(runner.metrics, "append", append_failing_once)
+    write_shared_wal([0])
+    with pytest.raises(RuntimeError):
+        runner.tail_batch()
+    assert failed and any(
+        k.startswith("p1:tail:") for k in runner.tables["beta"].committed_keys()
+    )
+
+    write_shared_wal([1])
+    out = runner.tail_batch()
+    for t in TABLES:
+        assert out[t]["applied"], out[t]
+        assert_state_matches(spark, runner.tables[t], _expected(specs, states, t))
+
+
+def test_multi_table_mor_compacts_each_table(spark, tmp_warehouse):
+    """write_mode='mor' folds each table's deltas once they reach
+    mor_compact_threshold (single-table twin:
+    tests/test_mor.py::test_mor_runner_auto_compaction)."""
+    threshold = 4
+    specs, states, sources, write_shared_wal = _env(spark, tmp_warehouse, n_segments=8)
+    runner, cfg = _runner(
+        spark, tmp_warehouse, sources, write_mode="mor",
+        mor_compact_threshold=threshold,
+    )
+    runner.start()
+    for i in range(8):
+        write_shared_wal([i])
+        out = runner.tail_batch()
+        assert all(out[t]["applied"] for t in TABLES), out
+
+    for t in TABLES:
+        assert runner.tables[t].delta_stats()["delta_files"] < threshold + NB
+        assert_state_matches(spark, runner.tables[t], _expected(specs, states, t))

@@ -87,6 +87,8 @@ def test_snapshot_then_wal_replay(spark, tmp_warehouse):
         )
         stats = apply_batch(table, df, commit_key=f"p1:{i+1}")
         assert stats["applied"]
+        # the Observation metrics were read, no recount job was paid
+        assert stats["observation_recount"] is False
 
     expected = oracle_apply([snap] + wal)
     assert_state_matches(spark, table, expected)
@@ -141,9 +143,9 @@ def test_idempotent_redelivery(spark, tmp_warehouse):
     assert_state_matches(spark, table, expected)
 
 
-def test_dedup_strategies_agree(spark, tmp_warehouse):
-    from debezium_partial_snapshotter_spark.operators.dedup import latest_events
-
+def test_hot_key_apply_matches_oracle(spark, tmp_warehouse):
+    """The one latest-event reduction — apply_batch's per-key max — on a
+    hot-keyed log, plain and salted, in both write modes."""
     spec = EventLogSpec(n_docs=50, n_events=800, n_segments=1, seed=3,
                         hot_frac=0.1, hot_weight=200.0)
     wal = generate_change_log(spec, out_dir=None)
@@ -151,47 +153,18 @@ def test_dedup_strategies_agree(spark, tmp_warehouse):
     os.makedirs(d)
     pq.write_table(wal[0], os.path.join(d, "w.parquet"))
     df = load_events(spark, d)
+    expected = oracle_apply(wal)
 
-    a = latest_events(df, strategy="max_by").select("doc_id", "lsn", "op")
-    b = latest_events(df, strategy="window").select("doc_id", "lsn", "op")
-    c = latest_events(df, strategy="max_by", salt_buckets=8).select(
-        "doc_id", "lsn", "op"
-    )
-    d = latest_events(df, strategy="join").select("doc_id", "lsn", "op")
-    e = latest_events(df, strategy="join", salt_buckets=8).select(
-        "doc_id", "lsn", "op"
-    )
-    pa_ = a.orderBy("doc_id").toPandas()
-    for other in (b, c, d, e):
-        assert pa_.equals(other.orderBy("doc_id").toPandas())
-
-
-def test_latest_events_join_dedups_exact_redelivery(spark):
-    """The join strategy must keep exactly ONE copy of a
-    duplicate-delivered event (same key, lsn, op, content). The plan is
-    allowed a SortAggregate ONLY on the tied-keys branch (a narrow
-    count isolates tied keys first; the wide bulk flows through an
-    order-insensitive anti-join) — correctness must not depend on row
-    order or per-row ids, which task retries can change."""
-    from debezium_partial_snapshotter_spark.operators.dedup import latest_events
-
-    rows = [
-        ("r", "k1", 10, "true", "tokens/0000", ("k1", [1], 1, "s")),
-        ("u", "k1", 12, "false", "tokens/0000", ("k1", [2], 1, "s")),
-        ("u", "k1", 12, "false", "tokens/0000", ("k1", [2], 1, "s")),  # dup
-        ("u", "k2", 11, "false", "tokens/0000", ("k2", [3], 1, "s")),
-        ("u", "k2", 11, "false", "tokens/0000", ("k2", [3], 1, "s")),  # dup
-    ]
-    from debezium_partial_snapshotter_spark.schemas import CHANGE_EVENT_SCHEMA
-
-    df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-    out = latest_events(df, strategy="join")
-    got = {r["doc_id"]: (r["lsn"], r["op"]) for r in out.collect()}
-    assert out.count() == 2
-    assert got == {"k1": (12, "u"), "k2": (11, "u")}
-
-    # tie-free input: exactly one row per key, nothing dropped
-    clean = latest_events(
-        df.dropDuplicates(["doc_id", "lsn"]), strategy="join"
-    )
-    assert clean.count() == 2
+    for salt_buckets in (0, 8):
+        for mode in ("cow", "mor"):
+            table = empty_table_for(
+                os.path.join(tmp_warehouse, f"tokens_{salt_buckets}_{mode}"),
+                TOKENS_SCHEMA,
+                num_buckets=4,
+            )
+            stats = apply_batch(
+                table, df, commit_key="p1:0", salt_buckets=salt_buckets,
+                write_mode=mode,
+            )
+            assert stats["applied"], (salt_buckets, mode)
+            assert_state_matches(spark, table, expected)
