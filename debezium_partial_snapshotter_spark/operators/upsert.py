@@ -200,10 +200,12 @@ def apply_batch(
     else:
         maxes = all_cand.groupBy("doc_id").agg(F.max("_ord").alias("_mx"))
     # join the winning (key, ord) back to its full row. maxes is narrow
-    # (two longs per key) — AQE upgrades this to a broadcast join when it
-    # fits; the SHUFFLE_HASH hint pins the fallback to ShuffledHashJoin
-    # (without it the static planner picks SortMergeJoin, which sorts the
-    # wide token-array side — the exact plan this formulation avoids).
+    # (two longs per key) and is the build side: the SHUFFLE_HASH hint
+    # pins ShuffledHashJoin, and AQE keeps the hinted strategy even when
+    # maxes would fit a broadcast (a 6k-event epoch over 4k keys runs
+    # ShuffledHashJoin with a ~200 KiB build side). Without the hint the
+    # static planner picks SortMergeJoin, which sorts the wide
+    # token-array side — the exact plan this formulation avoids.
     obs_keys = Observation()
     maxes = maxes.observe(obs_keys, F.count(F.lit(1)).alias("n_keys"))
     winners = all_cand.join(maxes.hint("SHUFFLE_HASH"), "doc_id").where(

@@ -63,6 +63,7 @@ from debezium_partial_snapshotter_spark.plans.lake import (
     VersionExpiredError,
     _atomic_create,
 )
+from debezium_partial_snapshotter_spark.session import empty_frame
 
 
 class ConcurrentConsumerError(Exception):
@@ -284,7 +285,9 @@ class ChangefeedReader:
         range-end watermark at rank 3 — see the inline comment — and
         carry NULL payload to match tombstone shape), 'error' raises
         :class:`IneligibleRangeError` (for consumers that must never
-        pay a resolve)."""
+        pay a resolve). A range of more than ``max_delta_epochs``
+        epochs counts as ineligible without being probed, and its
+        'error' message says so: it names the cap, not a commit."""
         if mode not in ("delta", "net"):
             raise ValueError(f"unknown mode {mode!r}")
         from_v = self.cursor()
@@ -310,7 +313,7 @@ class ChangefeedReader:
             return ChangefeedBatch(df, from_v, to_v, mode, fast, epochs)
 
         if to_v == from_v:
-            empty = self.table._read_files(spark, [], sch).withColumn(
+            empty = empty_frame(spark, sch).withColumn(
                 "_change_type", F.lit(None).cast("string")
             )
             return _batch(empty, False, 0)
@@ -330,14 +333,17 @@ class ChangefeedReader:
             # straight to the fallback (the net resolve is
             # O(changed buckets) regardless of how far behind)
             files = None
+            why = (
+                f"spans {n_epochs} > max_delta_epochs="
+                f"{self.max_delta_epochs} epochs; eligibility not probed"
+            )
         else:
             chain = self._chain(from_v, to_v)
             files = self._delta_plan(from_v, chain)
+            why = "contains a non-delta commit"
         if files is None:
             if on_ineligible == "error":
-                raise IneligibleRangeError(
-                    f"({from_v}, {to_v}] contains a non-delta commit"
-                )
+                raise IneligibleRangeError(f"({from_v}, {to_v}] {why}")
             net = self.table.read_changes(spark, from_v, to_v)
             # Same upsert/delete shape the fast path produces: deletes
             # get NULL payload (tombstone shape). The net feed's delete
@@ -379,7 +385,7 @@ class ChangefeedReader:
             return _batch(df, False, n_epochs)
 
         if not files:
-            empty = self.table._read_files(spark, [], sch).withColumn(
+            empty = empty_frame(spark, sch).withColumn(
                 "_change_type", F.lit(None).cast("string")
             )
             return _batch(empty, True, n_epochs)

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from debezium_partial_snapshotter_spark.session import empty_frame
+
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 
@@ -379,7 +381,7 @@ class LakeTable:
 
     def _read_files(self, spark, files: list[str], schema: StructType) -> DataFrame:
         if not files:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         # Explicit read schema serves files written before an add-column
         # or type-widen evolution: missing columns come back NULL and the
         # Spark 4 vectorized parquet reader up-casts int32->int64 /
@@ -401,6 +403,10 @@ class LakeTable:
         (_lsn, _op_rank) over (base ∪ deltas), delete tombstones dropped
         — Iceberg v2 MoR semantics. Old-schema files are up-cast to the
         current manifest schema (add-column -> NULL, int -> long).
+
+        An empty bucket set (a fresh table, or buckets with no files)
+        reads as an empty local relation, so Spark folds it out of the
+        unions and joins that consume it and schedules no task for it.
         """
         man = self.manifest(version)
         schema = StructType.fromJson(man["schema"])
@@ -458,23 +464,15 @@ class LakeTable:
                 f"from_version {from_version} > to_version {to_v}"
             )
         key = self.bucket_key
-        empty_types = F.lit(None).cast("string")
-        if from_version == to_v:
-            sch = self.schema(to_v)
-            return (
-                self._read_files(spark, [], sch)
-                .withColumn("_change_type", empty_types)
-            )
-        # touched buckets over (from_version, to_v] — the shared chain
-        # walk; VersionExpiredError propagates (the consumer must
-        # re-bootstrap), unlike the conflict check's conservative policy
+        # touched buckets over (from_version, to_v] (none when the range
+        # is empty) — the shared chain walk; VersionExpiredError
+        # propagates (the consumer must re-bootstrap), unlike the
+        # conflict check's conservative policy
         touched = self._touched_between(from_version, to_v)
         buckets = None if touched is None else sorted(touched)
         if buckets == []:
-            sch = self.schema(to_v)
-            return (
-                self._read_files(spark, [], sch)
-                .withColumn("_change_type", empty_types)
+            return empty_frame(spark, self.schema(to_v)).withColumn(
+                "_change_type", F.lit(None).cast("string")
             )
         old = self.read(spark, buckets=buckets, version=from_version)
         new = self.read(spark, buckets=buckets, version=to_v)

@@ -20,6 +20,9 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from debezium_partial_snapshotter_spark.session import empty_frame
 
 
 class AppendLog:
@@ -54,9 +57,7 @@ class AppendLog:
     def to_spark(self, spark):
         files = [f for f in os.listdir(self.path) if f.endswith(".parquet")]
         if not files:
-            import pandas as pd
-
-            return spark.createDataFrame(self.schema.empty_table().to_pandas())
+            return empty_frame(spark, from_arrow_schema(self.schema))
         return spark.read.parquet(self.path)
 
 

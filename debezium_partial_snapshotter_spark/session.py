@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -87,6 +89,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty DataFrame with exactly ``schema`` (names, types,
+    nullability). Built from an empty Arrow table, it plans as
+    ``LocalTableScan <empty>``, which the optimizer folds out of unions
+    and joins and which runs no task. ``createDataFrame([], schema)``
+    and an empty pandas frame go through a Python RDD instead: Spark
+    cannot see that it is empty, and every plan branch over it runs one
+    Python-worker task per core."""
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
 def _pid_alive(pid: int) -> bool:

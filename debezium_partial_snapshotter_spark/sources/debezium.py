@@ -39,6 +39,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from debezium_partial_snapshotter_spark.functions import bucket_id, table_partition
 from debezium_partial_snapshotter_spark.schemas import TOKENS_SCHEMA
+from debezium_partial_snapshotter_spark.session import empty_frame
 from debezium_partial_snapshotter_spark.sources.readers import ParquetWalSource
 
 
@@ -399,9 +400,10 @@ class DebeziumJsonSource(ParquetWalSource):
         if not paths:
             if self.quarantine_dir:
                 self.last_quarantined = 0  # empty poll: nothing rejected
-            return self.spark.createDataFrame(
-                [], self._decode(self.spark.createDataFrame([("x",)], "value string")).schema
-            )
+            # the decode of an empty text relation folds to an empty
+            # relation of the decoded schema
+            raw = StructType([StructField("value", StringType())])
+            return self._decode(empty_frame(self.spark, raw))
         if self.quarantine_dir:
             self._quarantine(paths)
         df = self._decode(self.spark.read.text(paths))

@@ -22,6 +22,7 @@ from pyspark.sql.types import StructType
 
 from debezium_partial_snapshotter_spark.functions import bucket_id, table_partition
 from debezium_partial_snapshotter_spark.schemas import CHANGE_EVENT_SCHEMA
+from debezium_partial_snapshotter_spark.session import empty_frame
 
 
 class ParquetWalSource:
@@ -103,7 +104,7 @@ class ParquetWalSource:
         if paths is None:
             paths = self.wal_segment_paths()
         if not paths:
-            return self.spark.createDataFrame([], self.event_schema)
+            return empty_frame(self.spark, self.event_schema)
         df = self.spark.read.schema(self.event_schema).parquet(*paths)
         if since_lsn is not None:
             df = df.where(F.col("lsn") > F.lit(since_lsn))

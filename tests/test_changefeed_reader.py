@@ -711,6 +711,29 @@ def test_far_behind_cursor_skips_manifest_walk(spark, tmp_warehouse):
     assert rows == net
 
 
+def test_capped_range_error_names_the_cap(spark, tmp_warehouse):
+    """on_ineligible='error' over a range longer than max_delta_epochs
+    must say that the cap stopped the probe, not blame a commit: both
+    commits in the range are pure delta appends."""
+    table, vs = _build(spark, tmp_warehouse)
+    assert vs[-1] - vs[-3] == 2
+    r = ChangefeedReader(
+        table, os.path.join(tmp_warehouse, "cursor_cap1"), max_delta_epochs=1
+    )
+    r.start(from_version=vs[-3])
+    with pytest.raises(IneligibleRangeError, match="max_delta_epochs") as e:
+        r.poll(spark, mode="delta", to_version=vs[-1], on_ineligible="error")
+    assert "2 > max_delta_epochs=1" in str(e.value)
+    assert "non-delta" not in str(e.value)
+    # the same range is eligible once the cap allows the probe
+    uncapped = ChangefeedReader(table, os.path.join(tmp_warehouse, "cursor_cap2"))
+    uncapped.start(from_version=vs[-3])
+    b = uncapped.poll(
+        spark, mode="delta", to_version=vs[-1], on_ineligible="error"
+    )
+    assert b.fast_path
+
+
 def test_commit_bootstrap_refuses_rewind(spark, tmp_warehouse):
     """ADVICE r6: a concurrent instance that advanced the cursor past
     the bootstrap's to_version must not be rewound."""
