@@ -98,7 +98,3 @@ class PipelineConfig:
     @property
     def commit_log_path(self) -> str:
         return f"{self.warehouse}/_commit_log/{self.target_table}"
-
-    @property
-    def metrics_path(self) -> str:
-        return f"{self.warehouse}/_metrics/{self.target_table}"

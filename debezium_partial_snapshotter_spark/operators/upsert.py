@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from debezium_partial_snapshotter_spark.functions import bucket_id, op_rank, salt
+from debezium_partial_snapshotter_spark.functions import op_rank, salt
 from debezium_partial_snapshotter_spark.operators.schema_evolution import (
     conform,
     merge_schemas,
@@ -115,12 +115,7 @@ def apply_batch(
     # CommitConflict (re-bucket + re-merge) instead of silently
     # misplacing rows. Reading them separately would reintroduce the
     # race the token guards against (stale expression + fresh token).
-    if hasattr(table, "bucket_plan"):
-        nb, bexpr, layout = table.bucket_plan(F.col("doc_id"))
-    else:
-        nb = table.num_buckets
-        bexpr = bucket_id(F.col("doc_id"), nb)
-        layout = None
+    _, bexpr, layout = table.bucket_plan(F.col("doc_id"))
 
     # ---- 1. plan: per-bucket row counts + LSN ranges. A cheap scan —
     # column-pruned to (doc_id, lsn), partial-aggregated to <= nb rows
@@ -275,7 +270,6 @@ def apply_batch(
             commit_key=commit_key,
             new_schema=with_system(merged) if evolved else None,
             validate=validate,
-            expected_num_buckets=nb,
             expected_layout=layout,
             # snapshot keys are pinned: their events escape the
             # lsn > watermark replay filter, so only the key blocks
@@ -286,8 +280,8 @@ def apply_batch(
         )
     except CommitConflict:
         # CoW: a concurrent writer committed into our buckets after we
-        # read them; either mode: a concurrent rescale bucketed this
-        # batch under a stale num_buckets. The merge is stale —
+        # read them; either mode: a concurrent rescale or split
+        # bucketed this batch under a stale layout. The merge is stale —
         # re-read and re-merge under the new layout.
         if _merge_retries <= 0:
             raise

@@ -62,6 +62,7 @@ from debezium_partial_snapshotter_spark.plans.lake import (
     LakeTable,
     VersionExpiredError,
     _atomic_create,
+    latest_per_key,
 )
 from debezium_partial_snapshotter_spark.session import empty_frame
 
@@ -209,18 +210,10 @@ class ChangefeedReader:
 
     # ------------------------------------------------------------- chain
     def _chain(self, from_v: int, to_v: int) -> list[dict]:
-        """Manifests of (from_v, to_v], ascending. VersionExpiredError
-        propagates when the chain crosses the horizon."""
-        out: list[dict] = []
-        cur = self.table.manifest(to_v)
-        while cur["version"] > from_v:
-            out.append(cur)
-            parent = cur.get("parent")
-            if parent is None:
-                break
-            cur = self.table.manifest(parent)
-        out.reverse()
-        return out
+        """Manifests of (from_v, to_v], ascending: the table's chain walk
+        (``LakeTable._chain``). VersionExpiredError propagates when the
+        chain crosses the horizon."""
+        return list(self.table._chain(from_v, to_v))[::-1]
 
     def _delta_plan(
         self, from_v: int, chain: list[dict]
@@ -395,22 +388,12 @@ class ChangefeedReader:
             + [StructField("_is_delete", BooleanType(), False)]
         )
         deltas = self.table._read_files(spark, files, delta_schema)
-        # winner per key across the polled epochs: same primitive-max +
-        # SHUFFLE_HASH join-back as the MoR resolve (sort-free; rows are
-        # tie-free across commits by construction — see _resolve_mor's
-        # proof). One groupBy over O(batch) rows; single-epoch polls
-        # reduce to a pass-through since apply already wrote one winner
-        # per key.
-        allc = deltas.withColumn(
-            "_mord", F.col("_lsn") * 4 + F.col("_op_rank")
-        )
-        maxes = allc.groupBy(key).agg(F.max("_mord").alias("_mmx"))
-        resolved = (
-            allc.join(maxes.hint("SHUFFLE_HASH"), key)
-            .where(F.col("_mord") == F.col("_mmx"))
-            .drop("_mord", "_mmx")
-        )
-        df = resolved.select(
+        # winner per key across the polled epochs: the MoR resolve's
+        # reduction (rows are tie-free across commits by construction —
+        # see _resolve_mor's proof). One groupBy over O(batch) rows;
+        # single-epoch polls reduce to a pass-through since apply
+        # already wrote one winner per key.
+        df = latest_per_key(deltas, key).select(
             *[f.name for f in sch.fields],
             F.when(F.col("_is_delete"), F.lit("delete"))
             .otherwise(F.lit("upsert"))
@@ -499,7 +482,7 @@ def apply_feed(
     )
 
     key = table.bucket_key
-    nb, bexpr, layout = table.bucket_plan(F.col(key))
+    _, bexpr, layout = table.bucket_plan(F.col(key))
     cur = table.schema()
     feed_user = StructType(
         [
@@ -512,7 +495,7 @@ def apply_feed(
     merged_user = merge_schemas(user_schema(cur), feed_user)
     sch = with_system(merged_user)
     evolved = not schemas_equal(sch, cur)
-    winners = feed.select(
+    feed_rows = feed.select(
         *[
             F.col(f.name).cast(f.dataType).alias(f.name)
             if f.name in feed.columns
@@ -520,14 +503,8 @@ def apply_feed(
             for f in sch.fields
         ],
         (F.col("_change_type") == "delete").alias("_is_delete"),
-    ).withColumn("_mord", F.col("_lsn") * 4 + F.col("_op_rank"))
-    maxes = winners.groupBy(key).agg(F.max("_mord").alias("_mmx"))
-    winners = (
-        winners.join(maxes.hint("SHUFFLE_HASH"), key)
-        .where(F.col("_mord") == F.col("_mmx"))
-        .drop("_mord", "_mmx")
-        .withColumn("_bucket", bexpr)
     )
+    winners = latest_per_key(feed_rows, key).withColumn("_bucket", bexpr)
     # Affected buckets come from a NARROW pass over the feed key, not
     # from `winners`: the resolve keeps >= 1 row per key, so the
     # winners' bucket set IS the feed keys' bucket set — and collecting
@@ -555,7 +532,6 @@ def apply_feed(
         affected_buckets=affected,
         commit_key=commit_key,
         new_schema=sch if evolved else None,
-        expected_num_buckets=nb,
         expected_layout=layout,
     )
 

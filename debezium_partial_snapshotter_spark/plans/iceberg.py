@@ -214,11 +214,6 @@ class IcebergTable:
             return str(nb)
         return f"{nb}->{tgt.split('->')[-1]}"
 
-    def bucket_expr(self, key):
-        from debezium_partial_snapshotter_spark.functions import bucket_id
-
-        return bucket_id(key, self.num_buckets)
-
     def bucket_plan(self, key):
         """Contract parity with LakeTable.bucket_plan: one properties
         read yields all three. While an offline rescale is pending
@@ -324,11 +319,9 @@ class IcebergTable:
         new_schema: StructType | None = None,
         watermark_lsn: int | None = None,
         snapshot_lsn: int | None = None,
-        max_retries: int = 5,
         validate=None,
         expected_version: int | None = None,
         read_version: int | None = None,
-        expected_num_buckets: int | None = None,
         pin_key: bool = False,
         expected_layout: str | None = None,
     ) -> bool | str:
@@ -377,14 +370,6 @@ class IcebergTable:
         redelivery is a duplicate no-op. There is no state in which the
         key is visible without its validated data.
         """
-        if (
-            expected_num_buckets is not None
-            and self.num_buckets != expected_num_buckets
-        ):
-            raise CommitConflict(
-                f"num_buckets changed {expected_num_buckets} -> "
-                f"{self.num_buckets}; re-bucket and re-merge"
-            )
         if expected_layout is not None and expected_layout != self.layout_token():
             raise CommitConflict(
                 f"bucket layout changed {expected_layout} -> "
@@ -973,6 +958,3 @@ class IcebergTable:
         nb = self.num_buckets
         staged = df.withColumn("_bucket", bucket_id(F.col(self.bucket_key), nb))
         self.replace_buckets(staged, affected_buckets=list(range(nb)))
-
-    def to_pandas(self, spark: SparkSession):
-        return self.read(spark).toPandas()

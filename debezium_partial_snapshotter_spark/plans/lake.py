@@ -20,7 +20,9 @@ engine needs from Iceberg (SURVEY.md §7 "Iceberg caveat"):
 
 On a real cluster the same engine code runs against Iceberg by swapping
 this class for a thin Iceberg adapter (MERGE INTO / RewriteFiles); the
-operator layer only uses ``read / replace_buckets / committed_keys``.
+operator layer only uses ``read / bucket_plan / replace_buckets /
+append_deltas / committed_keys / delta_stats / compact /
+expire_versions``.
 
 Reference analog: the plugin's transactional tracker bookkeeping
 (``PostgresJdbcFilterHandler.java:73-137``) — BEGIN/COMMIT around
@@ -34,7 +36,7 @@ import os
 import shutil
 import time
 import uuid
-from typing import Iterable
+from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,6 +65,15 @@ DATA_DIR = "data"
 #: violated). Pinned keys live in ``pinned_keys``, never evicted;
 #: growth is one key per snapshot epoch — rare by construction.
 MAX_COMMIT_KEYS = 512
+
+#: Attempts of the manifest CAS (``LakeTable._transact``): a writer that
+#: loses the race to create the next version re-reads the head and
+#: rebuilds its manifest on top of it.
+CAS_ATTEMPTS = 5
+#: Attempts of the recompute loop (``LakeTable._recompute``) behind
+#: ``overwrite``, ``rescale`` and ``split_bucket``: a guard conflict
+#: recomputes their new content from the fresh head.
+RECOMPUTE_ATTEMPTS = 3
 
 
 class CommitConflict(Exception):
@@ -102,10 +113,25 @@ def _atomic_create(tmp_path: str, final_path: str) -> bool:
             pass
 
 
+def latest_per_key(df: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Winner row per key by (_lsn, _op_rank), delete tombstones kept:
+    a primitive max of the one-BIGINT ordinal, joined back to the full
+    row with SHUFFLE_HASH — the same sort-free plan as the apply merge.
+    The one latest-event reduction behind the MoR read, the changefeed
+    fast path and ``apply_feed``; it keeps every tied row, so its input
+    must be tie-free per key (see ``_resolve_mor``)."""
+    allc = df.withColumn("_mord", F.col("_lsn") * 4 + F.col("_op_rank"))
+    maxes = allc.groupBy(key).agg(F.max("_mord").alias("_mmx"))
+    return (
+        allc.join(maxes.hint("SHUFFLE_HASH"), key)
+        .where(F.col("_mord") == F.col("_mmx"))
+        .drop("_mord", "_mmx")
+    )
+
+
 def _resolve_mor(base: DataFrame, deltas: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Winner per key by (_lsn, _op_rank) over (base ∪ deltas), keeping
-    delete tombstones until the caller drops them. Same sort-free plan
-    as the apply merge: primitive max + SHUFFLE_HASH join-back.
+    """Winner per key by (_lsn, _op_rank) over (base ∪ deltas), delete
+    tombstones dropped (``latest_per_key`` plus the delete filter).
 
     No tie guard: stored rows are tie-free BY CONSTRUCTION, so the
     join-back yields exactly one row per key. Proof: (a) within one
@@ -125,15 +151,7 @@ def _resolve_mor(base: DataFrame, deltas: DataFrame, key: str = "doc_id") -> Dat
     stands between a late snapshot redelivery and tied delta rows. A round-1 dropDuplicates
     here compiled to SortAggregate over wide token rows on EVERY
     delta-bucket read — the exact plan the write path paid to remove."""
-    allc = base.unionByName(deltas).withColumn(
-        "_mord", F.col("_lsn") * 4 + F.col("_op_rank")
-    )
-    maxes = allc.groupBy(key).agg(F.max("_mord").alias("_mmx"))
-    resolved = (
-        allc.join(maxes.hint("SHUFFLE_HASH"), key)
-        .where(F.col("_mord") == F.col("_mmx"))
-        .drop("_mord", "_mmx")
-    )
+    resolved = latest_per_key(base.unionByName(deltas), key)
     return resolved.where(~F.col("_is_delete"))
 
 
@@ -238,6 +256,44 @@ class LakeTable:
         if not _atomic_create(tmp, final):
             raise CommitConflict(f"version {v} already committed in {self.path}")
 
+    def _transact(self, build):
+        """BEGIN .. COMMIT analog (``PostgresJdbcFilterHandler.java:73-137``;
+        the same contract as ``SnapshotTracker._transact``): read the
+        head manifest, let ``build(head)`` return ``(next, result)``,
+        atomic-create ``next`` as the head's successor and return
+        ``result``. ``next=None`` returns ``result`` without a commit.
+        Only a lost race to create the successor retries, from a fresh
+        head; a CommitConflict that ``build`` raises (a guard) does not.
+        The successor's ``version``, ``parent`` and ``ts`` are set here."""
+        for attempt in range(CAS_ATTEMPTS):
+            man = self.manifest()
+            new_man, result = build(man)
+            if new_man is None:
+                return result
+            new_man.update(
+                version=man["version"] + 1, parent=man["version"], ts=time.time()
+            )
+            try:
+                self._write_manifest(new_man)
+                return result
+            except CommitConflict:
+                if attempt == CAS_ATTEMPTS - 1:
+                    raise
+                time.sleep(0.05 * (attempt + 1))
+
+    def _recompute(self, step):
+        """Retry loop for commits whose content is computed from a
+        manifest (``overwrite``, ``rescale``, ``split_bucket``): call
+        ``step(head)`` and, when its guarded commit raises
+        CommitConflict, recompute from the fresh head."""
+        for attempt in range(RECOMPUTE_ATTEMPTS):
+            try:
+                return step(self.manifest())
+            except CommitConflict:
+                if attempt == RECOMPUTE_ATTEMPTS - 1:
+                    raise
+                time.sleep(0.05 * (attempt + 1))
+
     # ------------------------------------------------------------- schema
     def schema(self, version: int | None = None) -> StructType:
         return StructType.fromJson(self.manifest(version)["schema"])
@@ -251,8 +307,17 @@ class LakeTable:
         return self.manifest()["bucket_key"]
 
     def committed_keys(self) -> set[str]:
-        man = self.manifest()
+        return self._keys_of(self.manifest())
+
+    @staticmethod
+    def _keys_of(man: dict) -> set[str]:
         return set(man["commit_keys"]) | set(man.get("pinned_keys", []))
+
+    @staticmethod
+    def _entries_of(man: dict) -> set[int]:
+        """Every bucket entry holding base or delta files (mid-rescale
+        entries may sit above ``num_buckets``)."""
+        return {int(b) for kind in ("buckets", "deltas") for b in man.get(kind, {})}
 
     # ----------------------------------------------------- bucket layout
     @staticmethod
@@ -277,13 +342,12 @@ class LakeTable:
 
     def bucket_plan(self, key: "F.Column"):
         """(num_buckets, bucket_expr, layout_token) from ONE manifest
-        read. Appliers must take all three from here, not from separate
-        ``num_buckets``/``bucket_expr()``/``layout_token()`` calls: a
-        concurrent ``split_bucket`` landing between two reads would
-        pair a STALE bucket expression with the NEW layout token, so
-        the commit-time layout guard passes while rows are routed to
-        wrong bucket entries — exactly the corruption the token exists
-        to catch."""
+        read. Appliers must take the expression and the token from
+        here, not from separate reads: a concurrent ``split_bucket``
+        landing between two reads would pair a STALE bucket expression
+        with the NEW layout token, so the commit-time layout guard
+        passes while rows are routed to wrong bucket entries — exactly
+        the corruption the token exists to catch."""
         man = self.manifest()
         return (
             man["num_buckets"],
@@ -292,6 +356,13 @@ class LakeTable:
         )
 
     def _bucket_expr_of(self, man: dict, key: "F.Column"):
+        """Effective bucket assignment under ``man``, honoring an
+        in-flight incremental rescale (linear-hashing style): keys whose
+        OLD bucket has been split route to md5 % new_count, everyone
+        else stays on md5 % old_count. Because the new count is a
+        multiple of the old, a key's new bucket id is always
+        ``old_b + i*nb`` — entry ids never collide across the two
+        numberings."""
         from debezium_partial_snapshotter_spark.functions import bucket_id
 
         nb = man["num_buckets"]
@@ -304,47 +375,40 @@ class LakeTable:
             old.isin([int(b) for b in rs["done"]]), new
         ).otherwise(old)
 
-    def bucket_expr(self, key: "F.Column"):
-        """Effective bucket assignment, honoring an in-flight
-        incremental rescale (linear-hashing style): keys whose OLD
-        bucket has been split route to md5 % new_count, everyone else
-        stays on md5 % old_count. Because the new count is a multiple
-        of the old, a key's new bucket id is always ``old_b + i*nb`` —
-        entry ids never collide across the two numberings.
-
-        NOTE: pairs with a SEPARATE manifest read from
-        ``layout_token()`` — when both the expression and the token are
-        needed (any commit path), use ``bucket_plan`` instead."""
-        return self._bucket_expr_of(self.manifest(), key)
-
     def watermark_lsn(self) -> int:
         return self.manifest().get("watermark_lsn", -1)
 
     def snapshot_lsn(self) -> int:
         return self.manifest().get("snapshot_lsn", -1)
 
+    def _chain(self, from_version: int, to_version: int) -> Iterator[dict]:
+        """Manifests of (from_version, to_version], newest first, walked
+        down the parent chain — the ONE chain traversal behind the
+        concurrent-writer conflict check, the change feed and the
+        changefeed fast path. Raises FileNotFoundError /
+        VersionExpiredError when the chain crosses the expiration
+        horizon — each caller owns its policy for that."""
+        cur = self.manifest(to_version)
+        while cur["version"] > from_version:
+            yield cur
+            parent = cur.get("parent")
+            if parent is None:
+                return
+            cur = self.manifest(parent)
+
     def _touched_between(
         self, from_version: int, to_version: int
     ) -> set[int] | None:
         """Union of ``touched`` buckets over every manifest in
-        (from_version, to_version], walked down the parent chain — the
-        ONE chain traversal behind both the concurrent-writer conflict
-        check and the change feed. Returns None when any manifest in
+        (from_version, to_version]. Returns None when any manifest in
         the range predates the ``touched`` field (conservative:
-        everything). Propagates FileNotFoundError/VersionExpiredError
-        when the chain crosses the expiration horizon — each caller
-        owns its policy for that."""
+        everything). Propagates the chain's expiration errors."""
         touched: set[int] = set()
-        cur = self.manifest(to_version)
-        while cur["version"] > from_version:
-            t = cur.get("touched")
+        for man in self._chain(from_version, to_version):
+            t = man.get("touched")
             if t is None:
                 return None
             touched.update(int(b) for b in t)
-            parent = cur.get("parent")
-            if parent is None:
-                break
-            cur = self.manifest(parent)
         return touched
 
     def _conflicting_buckets(
@@ -535,22 +599,14 @@ class LakeTable:
         """Write df (carrying int ``_bucket``) under a fresh commit dir;
         returns (commit_dir, bucket -> relative file list).
 
-        By default each bucket's rows are co-located by one extra
-        shuffle on _bucket (one file per bucket — tight layout, cheap
-        reads). DPS_WRITE_COALESCE=0 skips that shuffle: the merge
-        output is already hash-partitioned by doc_id (a refinement of
-        _bucket), so every task just fans its rows out to the buckets
-        it holds — one less full pass of the wide rows over the
-        network/memory bus per epoch, at the cost of up-to
-        tasks x buckets files per commit (compaction folds them)."""
+        Each bucket's rows are co-located by one extra shuffle on
+        _bucket: one file per bucket — tight layout, cheap reads."""
         commit_id = uuid.uuid4().hex[:12]
         commit_dir = os.path.join(self.data_dir, f"c-{commit_id}")
         n_out = max(1, len(affected_buckets))
-        staged = df
-        if os.environ.get("DPS_WRITE_COALESCE", "1") != "0":
-            staged = df.repartition(n_out, "_bucket")
         (
-            staged.write.partitionBy("_bucket")
+            df.repartition(n_out, "_bucket")
+            .write.partitionBy("_bucket")
             .option("maxRecordsPerFile", 0)
             .mode("overwrite")
             .parquet(commit_dir)
@@ -570,69 +626,69 @@ class LakeTable:
             new_files.setdefault(b, []).extend(sorted(files))
         return commit_dir, new_files
 
-    def append_deltas(
+    def _commit_files(
         self,
         df: DataFrame,
         affected_buckets: list[int],
-        commit_key: str | None = None,
-        new_schema: StructType | None = None,
-        watermark_lsn: int | None = None,
-        snapshot_lsn: int | None = None,
-        max_retries: int = 5,
-        validate=None,
-        expected_num_buckets: int | None = None,
-        pin_key: bool = False,
-        expected_layout: str | None = None,
+        place,
+        commit_key: str | None,
+        new_schema: StructType | None,
+        watermark_lsn: int | None,
+        snapshot_lsn: int | None,
+        validate,
+        pin_key: bool,
+        expected_layout: str | None,
+        expected_version: int | None = None,
+        read_version: int | None = None,
     ) -> bool | str:
-        """Merge-on-read commit: append ``df`` (batch winners INCLUDING
-        delete tombstones, carrying ``_bucket`` and ``_is_delete``) as
-        delta files — no base rewrite. Readers resolve winners on the
-        fly; ``compact()`` folds deltas back into the base. This is the
-        low-write-amplification path for epochs touching a small
-        fraction of each bucket (Iceberg v2 MoR analog)."""
+        """The one data commit behind ``replace_buckets`` and
+        ``append_deltas``; ``place(next_manifest, new_files)`` is the
+        part that differs. A committed ``commit_key`` returns False,
+        before the write and on every head the CAS reads. ``validate``
+        runs after the write but before the manifest swap: a failure
+        abandons the commit dir unseen ("invalid"). A guard conflict
+        (layout, ``expected_version``, ``read_version`` overlap) removes
+        the commit dir and raises CommitConflict without a retry."""
         if commit_key is not None and commit_key in self.committed_keys():
             return False
         commit_dir, new_files = self._write_partitioned(df, affected_buckets)
         if validate is not None and not validate():
             shutil.rmtree(commit_dir, ignore_errors=True)
             return "invalid"
-        for attempt in range(max_retries):
-            man = self.manifest()
-            if (
-                expected_num_buckets is not None
-                and man["num_buckets"] != expected_num_buckets
-            ):
-                # a concurrent rescale changed the layout: this df was
-                # bucketed under a stale num_buckets — committing would
-                # scatter rows into wrong partitions undetected
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"num_buckets changed {expected_num_buckets} -> "
-                    f"{man['num_buckets']}; re-bucket and re-merge"
-                )
-            if (
-                expected_layout is not None
-                and self._layout_of(man) != expected_layout
-            ):
-                # an incremental split landed since this batch was
-                # bucketed: its delta rows would sit in entries the new
-                # bucket function no longer maps those keys to
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
+
+        def conflict(man: dict) -> str | None:
+            layout = self._layout_of(man)
+            if expected_layout is not None and layout != expected_layout:
+                # a split or rescale landed since df was bucketed: its
+                # rows would sit in entries the new bucket function no
+                # longer maps those keys to
+                return (
                     f"bucket layout changed {expected_layout} -> "
-                    f"{self._layout_of(man)}; re-bucket and re-merge"
+                    f"{layout}; re-bucket and re-merge"
                 )
-            if commit_key is not None and commit_key in (
-                set(man["commit_keys"]) | set(man.get("pinned_keys", []))
-            ):
+            if expected_version is not None and man["version"] != expected_version:
+                return f"expected v{expected_version}, found v{man['version']}"
+            if read_version is not None and man["version"] != read_version:
+                overlap = self._conflicting_buckets(
+                    read_version, man, affected_buckets
+                )
+                if overlap:
+                    return (
+                        f"buckets {sorted(overlap)} were modified since "
+                        f"v{read_version}; caller must re-read and re-merge"
+                    )
+            return None
+
+        def build(man: dict):
+            why = conflict(man)
+            if why is not None:
                 shutil.rmtree(commit_dir, ignore_errors=True)
-                return False
+                raise CommitConflict(why)
+            if commit_key is not None and commit_key in self._keys_of(man):
+                shutil.rmtree(commit_dir, ignore_errors=True)
+                return None, False
             new_man = {
                 **man,
-                "version": man["version"] + 1,
-                "parent": man["version"],
-                "op": "delta",
-                "deltas": {**man.get("deltas", {})},
                 "commit_keys": (
                     man["commit_keys"]
                     + ([commit_key] if commit_key and not pin_key else [])
@@ -640,11 +696,8 @@ class LakeTable:
                 "pinned_keys": man.get("pinned_keys", [])
                 + ([commit_key] if commit_key and pin_key else []),
                 "touched": sorted(int(b) for b in affected_buckets),
-                "ts": time.time(),
             }
-            for b, files in new_files.items():
-                if files:
-                    new_man["deltas"][b] = new_man["deltas"].get(b, []) + files
+            place(new_man, new_files)
             if new_schema is not None:
                 new_man["schema"] = json.loads(new_schema.json())
             if watermark_lsn is not None:
@@ -655,14 +708,40 @@ class LakeTable:
                 new_man["snapshot_lsn"] = max(
                     snapshot_lsn, man.get("snapshot_lsn", -1)
                 )
-            try:
-                self._write_manifest(new_man)
-                return True
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return True
+            return new_man, True
+
+        return self._transact(build)
+
+    def append_deltas(
+        self,
+        df: DataFrame,
+        affected_buckets: list[int],
+        commit_key: str | None = None,
+        new_schema: StructType | None = None,
+        watermark_lsn: int | None = None,
+        snapshot_lsn: int | None = None,
+        validate=None,
+        pin_key: bool = False,
+        expected_layout: str | None = None,
+    ) -> bool | str:
+        """Merge-on-read commit: append ``df`` (batch winners INCLUDING
+        delete tombstones, carrying ``_bucket`` and ``_is_delete``) as
+        delta files — no base rewrite. Readers resolve winners on the
+        fly; ``compact()`` folds deltas back into the base. This is the
+        low-write-amplification path for epochs touching a small
+        fraction of each bucket (Iceberg v2 MoR analog)."""
+
+        def place(new_man: dict, new_files: dict[str, list[str]]) -> None:
+            new_man["op"] = "delta"
+            deltas = new_man["deltas"] = {**new_man.get("deltas", {})}
+            for b, files in new_files.items():
+                if files:
+                    deltas[b] = deltas.get(b, []) + files
+
+        return self._commit_files(
+            df, affected_buckets, place, commit_key, new_schema,
+            watermark_lsn, snapshot_lsn, validate, pin_key, expected_layout,
+        )
 
     def delta_stats(self) -> dict:
         man = self.manifest()
@@ -679,12 +758,10 @@ class LakeTable:
         new_schema: StructType | None = None,
         watermark_lsn: int | None = None,
         snapshot_lsn: int | None = None,
-        max_retries: int = 5,
         validate=None,
         expected_version: int | None = None,
         read_version: int | None = None,
         new_num_buckets: int | None = None,
-        expected_num_buckets: int | None = None,
         pin_key: bool = False,
         expected_layout: str | None = None,
         manifest_update: dict | None = None,
@@ -712,164 +789,71 @@ class LakeTable:
         caller re-reads and re-merges. Commits to DISJOINT buckets
         rebase safely and do not conflict.
         """
-        if commit_key is not None and commit_key in self.committed_keys():
-            return False
 
-        commit_dir, new_files = self._write_partitioned(df, affected_buckets)
-        # post-write / pre-commit validation window: data files exist but
-        # the manifest swap has NOT happened — a failed validation
-        # abandons the commit dir with zero reader-visible effect.
-        if validate is not None and not validate():
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            return "invalid"
-
-        for attempt in range(max_retries):
-            man = self.manifest()
-            if (
-                expected_num_buckets is not None
-                and man["num_buckets"] != expected_num_buckets
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"num_buckets changed {expected_num_buckets} -> "
-                    f"{man['num_buckets']}; re-bucket and re-merge"
-                )
-            if (
-                expected_layout is not None
-                and self._layout_of(man) != expected_layout
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"bucket layout changed {expected_layout} -> "
-                    f"{self._layout_of(man)}; re-bucket and re-merge"
-                )
-            if expected_version is not None and man["version"] != expected_version:
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"expected v{expected_version}, found v{man['version']}"
-                )
-            if read_version is not None and man["version"] != read_version:
-                overlap = self._conflicting_buckets(
-                    read_version, man, affected_buckets
-                )
-                if overlap:
-                    shutil.rmtree(commit_dir, ignore_errors=True)
-                    raise CommitConflict(
-                        f"buckets {sorted(overlap)} were modified since "
-                        f"v{read_version}; caller must re-read and re-merge"
-                    )
-            if commit_key is not None and commit_key in (
-                set(man["commit_keys"]) | set(man.get("pinned_keys", []))
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                return False
-            new_man = {
-                **man,
-                "version": man["version"] + 1,
-                "parent": man["version"],
-                # the commit-kind marker: copied-forward manifests must
-                # not inherit an ancestor's kind, so every commit site
-                # stamps its own. manifest_update below may override
-                # (compact() stamps "compact", which the changefeed
-                # fast path treats as content-neutral).
-                "op": "replace",
-                "buckets": {**man["buckets"]},
-                "deltas": {**man.get("deltas", {})},
-                "commit_keys": (
-                    man["commit_keys"]
-                    + ([commit_key] if commit_key and not pin_key else [])
-                )[-MAX_COMMIT_KEYS:],
-                "pinned_keys": man.get("pinned_keys", [])
-                + ([commit_key] if commit_key and pin_key else []),
-                "touched": sorted(int(b) for b in affected_buckets),
-                "ts": time.time(),
-            }
+        def place(new_man: dict, new_files: dict[str, list[str]]) -> None:
+            # the commit-kind marker: copied-forward manifests must not
+            # inherit an ancestor's kind, so every commit site stamps
+            # its own. manifest_update below may override (compact()
+            # stamps "compact", which the changefeed fast path treats
+            # as content-neutral).
+            new_man["op"] = "replace"
+            buckets = new_man["buckets"] = {**new_man["buckets"]}
+            deltas = new_man["deltas"] = {**new_man.get("deltas", {})}
             for b, files in new_files.items():
                 if files:
-                    new_man["buckets"][b] = files
+                    buckets[b] = files
                 else:
-                    new_man["buckets"].pop(b, None)  # bucket emptied
+                    buckets.pop(b, None)  # bucket emptied
                 # a base replacement is fully resolved: deltas folded in
-                new_man["deltas"].pop(b, None)
+                deltas.pop(b, None)
             if new_num_buckets is not None:
                 new_man["num_buckets"] = int(new_num_buckets)
-            if manifest_update:
-                for k, v in manifest_update.items():
-                    if v is None:
-                        new_man.pop(k, None)
-                    else:
-                        new_man[k] = v
-            if new_schema is not None:
-                new_man["schema"] = json.loads(new_schema.json())
-            if watermark_lsn is not None:
-                new_man["watermark_lsn"] = max(
-                    watermark_lsn, man.get("watermark_lsn", -1)
-                )
-            if snapshot_lsn is not None:
-                new_man["snapshot_lsn"] = max(
-                    snapshot_lsn, man.get("snapshot_lsn", -1)
-                )
-            try:
-                self._write_manifest(new_man)
-                return True
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return True
+            for k, v in (manifest_update or {}).items():
+                if v is None:
+                    new_man.pop(k, None)
+                else:
+                    new_man[k] = v
 
-    def overwrite(
-        self,
-        df: DataFrame,
-        new_schema: StructType | None = None,
-        max_retries: int = 3,
-    ) -> None:
+        return self._commit_files(
+            df, affected_buckets, place, commit_key, new_schema,
+            watermark_lsn, snapshot_lsn, validate, pin_key, expected_layout,
+            expected_version=expected_version, read_version=read_version,
+        )
+
+    def overwrite(self, df: DataFrame, new_schema: StructType | None = None) -> None:
         """Full rewrite (bootstrap loads / tiny control tables).
 
         ONE manifest read feeds the bucket count, the routing
-        expression, AND the commit-time ``expected_layout`` guard — the
-        separate ``num_buckets``/``bucket_expr()`` reads this replaced
-        were exactly the stale-expression/fresh-state race the
-        ``bucket_plan`` docstring forbids (a ``split_bucket`` landing
-        between them misplaces rows with no CommitConflict; ADVICE r3).
-        Like ``rescale``, the rewrite lands everything under the PLAIN
-        layout and clears any in-flight incremental-rescale state in
-        the same commit (``manifest_update={'rescale': None}``) —
-        routing with the transitional expression while clearing the
-        transition would strand rows in above-``nb`` entries that
-        later merge writers never replace."""
+        expression, AND the commit-time ``expected_layout`` guard —
+        separate reads would be exactly the stale-expression/fresh-state
+        race the ``bucket_plan`` docstring forbids (a ``split_bucket``
+        landing between them misplaces rows with no CommitConflict;
+        ADVICE r3). Like ``rescale``, the rewrite lands everything under
+        the PLAIN layout and clears any in-flight incremental-rescale
+        state in the same commit (``manifest_update={'rescale': None}``)
+        — routing with the transitional expression while clearing the
+        transition would strand rows in above-``nb`` entries that later
+        merge writers never replace."""
         from debezium_partial_snapshotter_spark.functions import bucket_id
 
-        for attempt in range(max_retries):
-            man = self.manifest()
+        def step(man: dict) -> None:
             nb = man["num_buckets"]
             key = man.get("bucket_key", "doc_id")
-            staged = df.withColumn("_bucket", bucket_id(F.col(key), nb))
-            affected = sorted(
-                set(range(nb))
-                | {int(b) for b in man.get("buckets", {})}
-                | {int(b) for b in man.get("deltas", {})}
+            self.replace_buckets(
+                df.withColumn("_bucket", bucket_id(F.col(key), nb)),
+                affected_buckets=sorted(set(range(nb)) | self._entries_of(man)),
+                new_schema=new_schema,
+                expected_layout=self._layout_of(man),
+                manifest_update={"rescale": None},
             )
-            try:
-                self.replace_buckets(
-                    staged,
-                    affected_buckets=affected,
-                    new_schema=new_schema,
-                    expected_layout=self._layout_of(man),
-                    manifest_update={"rescale": None},
-                )
-                return
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        self._recompute(step)
 
     def rescale(
         self,
         spark: SparkSession,
         new_num_buckets: int,
         commit_key: str | None = None,
-        max_retries: int = 3,
     ) -> dict:
         """Bucket split/merge for table growth (SCALING.md future-work
         item, landed round 2): rewrite the table into a new bucket
@@ -884,12 +868,10 @@ class LakeTable:
         executor memory: double num_buckets, one table-scan-sized job."""
         from debezium_partial_snapshotter_spark.functions import bucket_id
 
-        for attempt in range(max_retries):
-            base_version = self.current_version()
-            man = self.manifest(base_version)
+        def step(man: dict) -> dict:
             old_nb = man["num_buckets"]
             key = man.get("bucket_key", "doc_id")
-            df = self.read(spark, version=base_version).withColumn(
+            df = self.read(spark, version=man["version"]).withColumn(
                 "_bucket", bucket_id(F.col(key), new_num_buckets)
             )
             # cover every existing entry (an in-flight incremental
@@ -897,33 +879,25 @@ class LakeTable:
             # clear any half-done transition state — the full rewrite
             # lands everything under the new layout in one commit
             affected = sorted(
-                set(range(max(old_nb, new_num_buckets)))
-                | {int(b) for b in man.get("buckets", {})}
-                | {int(b) for b in man.get("deltas", {})}
+                set(range(max(old_nb, new_num_buckets))) | self._entries_of(man)
             )
-            try:
-                applied = self.replace_buckets(
-                    df,
-                    affected_buckets=affected,
-                    commit_key=commit_key,
-                    expected_version=base_version,
-                    new_num_buckets=new_num_buckets,
-                    manifest_update={"rescale": None},
-                )
-                return {
-                    "applied": applied,
-                    "from_buckets": old_nb,
-                    "to_buckets": new_num_buckets,
-                }
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return {"applied": False}
+            applied = self.replace_buckets(
+                df,
+                affected_buckets=affected,
+                commit_key=commit_key,
+                expected_version=man["version"],
+                new_num_buckets=new_num_buckets,
+                manifest_update={"rescale": None},
+            )
+            return {
+                "applied": applied,
+                "from_buckets": old_nb,
+                "to_buckets": new_num_buckets,
+            }
 
-    def begin_rescale(
-        self, new_num_buckets: int, max_retries: int = 5
-    ) -> dict:
+        return self._recompute(step)
+
+    def begin_rescale(self, new_num_buckets: int) -> dict:
         """Open an ONLINE incremental rescale (VERDICT r2 next-4): the
         table keeps serving reads and applying tail batches while
         ``split_bucket`` migrates one bucket per commit; the last split
@@ -933,7 +907,7 @@ class LakeTable:
         must be a multiple of the current count, so a key in old bucket
         b can only move to ``b + i*nb`` — entry ids from the two
         numberings never collide, and the effective bucket function
-        (``bucket_expr``) is decidable per key from the ``done`` set
+        (``bucket_plan``) is decidable per key from the ``done`` set
         alone. Concurrent appliers capture ``layout_token()`` at plan
         time; a split landing under them turns their commit into
         CommitConflict -> re-bucket + re-merge (never silent
@@ -948,39 +922,29 @@ class LakeTable:
                 f"online rescale requires a multiple of {nb} (got {new}); "
                 "use rescale() for arbitrary counts"
             )
-        for attempt in range(max_retries):
-            man = self.manifest()
+
+        def build(man: dict):
             rs = man.get("rescale")
             if rs:
                 if rs["to"] == new:
-                    return {"applied": False, "reason": "in_progress"}
+                    return None, {"applied": False, "reason": "in_progress"}
                 raise CommitConflict(
                     f"another rescale to {rs['to']} is in progress"
                 )
-            new_man = {
+            return {
                 **man,
-                "version": man["version"] + 1,
-                "parent": man["version"],
                 "op": "rescale-begin",
                 "rescale": {"to": new, "done": []},
                 "touched": [],  # metadata-only: conflicts with no one
-                "ts": time.time(),
-            }
-            try:
-                self._write_manifest(new_man)
-                return {"applied": True, "from_buckets": nb, "to_buckets": new}
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return {"applied": False}
+            }, {"applied": True, "from_buckets": nb, "to_buckets": new}
+
+        return self._transact(build)
 
     def split_bucket(
         self,
         spark: SparkSession,
         bucket: int,
         commit_key: str | None = None,
-        max_retries: int = 3,
     ) -> dict:
         """Migrate ONE bucket of an open incremental rescale: rewrite
         entry ``bucket`` (MoR deltas folded) into its ``to/nb`` child
@@ -988,13 +952,14 @@ class LakeTable:
         version it read, so tail batches into OTHER buckets commit
         concurrently without conflict. At 100 TB this replaces the
         table-sized offline rewrite with num_buckets independent
-        bucket-sized commits interleaved with live ingest."""
+        bucket-sized commits interleaved with live ingest. A concurrent
+        apply into this bucket conflicts the commit out: the split
+        re-reads the bucket's new content and retries."""
         from debezium_partial_snapshotter_spark.functions import bucket_id
 
         b = int(bucket)
-        for attempt in range(max_retries):
-            base_version = self.current_version()
-            man = self.manifest(base_version)
+
+        def step(man: dict) -> dict:
             rs = man.get("rescale")
             if not rs:
                 raise ValueError("no rescale in progress; call begin_rescale")
@@ -1005,51 +970,42 @@ class LakeTable:
             if b in rs["done"]:
                 return {"applied": False, "reason": "already_split", "bucket": b}
             key = man.get("bucket_key", "doc_id")
-            df = self.read(spark, buckets=[b], version=base_version).withColumn(
+            df = self.read(spark, buckets=[b], version=man["version"]).withColumn(
                 "_bucket", bucket_id(F.col(key), to)
             )
             new_ids = sorted(b + i * nb for i in range(to // nb))
             done = sorted(set(rs["done"]) | {b})
             finalize = len(done) == nb
-            try:
-                applied = self.replace_buckets(
-                    df,
-                    affected_buckets=new_ids,  # includes b itself (i=0)
-                    commit_key=commit_key,
-                    read_version=base_version,
-                    # the layout guard is LOAD-BEARING here, not just
-                    # parity: manifest_update carries the done set
-                    # computed at base_version, and replace_buckets'
-                    # internal retry would otherwise re-apply it over a
-                    # CONCURRENT split's manifest — erasing that
-                    # split's done entry and hiding its child entries
-                    # from bucket_expr routing. Any layout change since
-                    # base therefore conflicts out to THIS loop, which
-                    # recomputes done from the fresh manifest.
-                    expected_layout=self._layout_of(man),
-                    new_num_buckets=to if finalize else None,
-                    manifest_update={
-                        "rescale": None if finalize else {"to": to, "done": done}
-                    },
-                )
-                return {
-                    "applied": applied,
-                    "bucket": b,
-                    "new_ids": new_ids,
-                    "finalized": finalize,
-                }
-            except CommitConflict:
-                # a concurrent apply touched this bucket: re-read its
-                # (new) content and retry the split
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return {"applied": False, "bucket": b}
+            applied = self.replace_buckets(
+                df,
+                affected_buckets=new_ids,  # includes b itself (i=0)
+                commit_key=commit_key,
+                read_version=man["version"],
+                # the layout guard is LOAD-BEARING here, not just
+                # parity: manifest_update carries the done set computed
+                # from `man`, and replace_buckets' CAS retry would
+                # otherwise re-apply it over a CONCURRENT split's
+                # manifest — erasing that split's done entry and hiding
+                # its child entries from bucket routing. Any layout
+                # change since `man` therefore conflicts out to the
+                # recompute loop, which recomputes done from the fresh
+                # manifest.
+                expected_layout=self._layout_of(man),
+                new_num_buckets=to if finalize else None,
+                manifest_update={
+                    "rescale": None if finalize else {"to": to, "done": done}
+                },
+            )
+            return {
+                "applied": applied,
+                "bucket": b,
+                "new_ids": new_ids,
+                "finalized": finalize,
+            }
+
+        return self._recompute(step)
 
     # ------------------------------------------------------------ utility
-    def to_pandas(self, spark: SparkSession):
-        return self.read(spark).toPandas()
-
     def compact(
         self, spark: SparkSession, min_files: int = 2, commit_key: str | None = None
     ) -> dict:
@@ -1068,8 +1024,10 @@ class LakeTable:
         )
         if not targets:
             return {"compacted_buckets": [], "applied": False}
+        # routed by the manifest the new base is computed from
+        key = F.col(man.get("bucket_key", "doc_id"))
         df = self.read(spark, buckets=targets, version=base_version).withColumn(
-            "_bucket", self.bucket_expr(F.col(self.bucket_key))
+            "_bucket", self._bucket_expr_of(man, key)
         )
         # strict CAS on the version the new base was computed from: a
         # concurrent delta commit makes this raise instead of being
@@ -1088,7 +1046,6 @@ class LakeTable:
         keep_last: int = 2,
         min_age_sec: float = 0.0,
         orphan_grace_sec: float = 3600.0,
-        max_retries: int = 5,
         sweep_orphans: bool = False,
     ) -> dict:
         """Storage reclamation (VERDICT r4 top item): every CoW commit
@@ -1161,10 +1118,9 @@ class LakeTable:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         now = time.time()
         # -------- phase 1: CAS the new horizon into the manifest chain
-        for attempt in range(max_retries):
-            versions = self._versions()
-            cur_v = versions[-1]
-            man = self.manifest(cur_v)
+        def build(man: dict):
+            # the versions up to the head this attempt builds on
+            versions = [v for v in self._versions() if v <= man["version"]]
             retained = set(versions[-keep_last:])
             if min_age_sec > 0 and len(versions) > 1:
                 # a version is expirable only once it has been
@@ -1203,41 +1159,32 @@ class LakeTable:
                 # retain v_i iff its successor committed after the
                 # cutoff: successor index i+1 >= lo  <=>  i >= lo-1
                 retained.update(versions[max(0, lo - 1):])
-            horizon = max(
-                min(retained), man.get("min_version", versions[0])
-            )
+            horizon = max(min(retained), man.get("min_version", versions[0]))
             if not any(v < horizon for v in versions):
                 # nothing expirable: skip the CAS (no manifest churn on
-                # a quiet table) and — unless an orphan-only sweep was
-                # requested — the O(table files) directory walk too;
-                # the runner calls this every few applies, so the no-op
-                # path must cost ~one manifest read (round-5 review)
-                if not sweep_orphans:
-                    return {
-                        "applied": False,
-                        "reason": "nothing_to_expire",
-                        "horizon": horizon,
-                        "expired_manifests": 0,
-                        "files_deleted": 0,
-                        "bytes_deleted": 0,
-                    }
-                break  # orphan-only: no horizon change, straight to 2
-            new_man = {
+                # a quiet table)
+                return None, (versions, horizon, False)
+            return {
                 **man,
-                "version": cur_v + 1,
-                "parent": cur_v,
                 "op": "expire",
                 "min_version": horizon,
                 "touched": [],  # metadata-only: conflicts with no one
-                "ts": time.time(),
+            }, (versions, horizon, True)
+
+        versions, horizon, expiring = self._transact(build)
+        if not expiring and not sweep_orphans:
+            # and, unless an orphan-only sweep was requested, skip the
+            # O(table files) directory walk too: the runner calls this
+            # every few applies, so the no-op path must cost ~one
+            # manifest read (round-5 review)
+            return {
+                "applied": False,
+                "reason": "nothing_to_expire",
+                "horizon": horizon,
+                "expired_manifests": 0,
+                "files_deleted": 0,
+                "bytes_deleted": 0,
             }
-            try:
-                self._write_manifest(new_man)
-                break
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
         # -------- phase 2: physical delete (idempotent, post-CAS)
         def _refs(m: dict) -> set[str]:
             out: set[str] = set()

@@ -143,3 +143,34 @@ def test_engine_never_creates_frames_from_empty_list():
         "createDataFrame([]) plans as a Python RDD that runs one task "
         f"per core; use session.empty_frame: {offenders}"
     )
+
+
+def _reads_environment(node: ast.AST) -> bool:
+    if isinstance(node, ast.Attribute):
+        return (
+            isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+            and node.attr in ("environ", "getenv")
+        )
+    if isinstance(node, ast.ImportFrom):
+        return node.module == "os" and any(
+            a.name in ("environ", "getenv") for a in node.names
+        )
+    return False
+
+
+def test_engine_reads_environment_only_in_session():
+    """session.py holds the deployment settings; an engine knob is a
+    parameter or a config field, never an environment variable."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "session.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        offenders += [
+            f"{path.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if _reads_environment(node)
+        ]
+    assert not offenders, f"environment reads outside session.py: {offenders}"

@@ -253,6 +253,69 @@ def test_apply_remerges_when_split_lands_mid_commit(spark, tmp_warehouse):
         assert d in {r["doc_id"] for r in t.read(spark, buckets=[b8]).collect()}
 
 
+def test_mor_apply_remerges_when_split_lands_mid_commit(spark, tmp_warehouse):
+    """The merge-on-read twin of the test above: splits landing between
+    the plan of apply_batch(write_mode='mor') and its append_deltas
+    commit change the layout token, so the delta commit must conflict
+    and re-bucket. No delta row may sit under an entry the new bucket
+    function no longer maps its key to."""
+    from debezium_partial_snapshotter_spark.plans.lake import LakeTable
+
+    path = os.path.join(tmp_warehouse, "olm")
+    t = empty_table_for(path, TOKENS_SCHEMA, 4)
+    keys = [f"k{i}" for i in range(16)]
+    apply_batch(
+        t, _events(spark, [("u", d, 10 + i) for i, d in enumerate(keys)]),
+        commit_key="p:0",
+    )
+    assert t.begin_rescale(8)["applied"]
+    done = {0, 1}
+
+    def eff(d):
+        b4 = bucket_id_py(d, 4)
+        return bucket_id_py(d, 8) if b4 in done else b4
+
+    # the batch holds keys that the splits move to a new entry
+    assert any(eff(d) != bucket_id_py(d, 4) for d in keys)
+
+    other = LakeTable(path)
+    orig = t.append_deltas
+    fired = {"n": 0}
+
+    def hook(*a, **kw):
+        if fired["n"] == 0:
+            fired["n"] = 1
+            for b in sorted(done):
+                assert other.split_bucket(spark, b, commit_key=f"q:split:{b}")[
+                    "applied"
+                ]
+        return orig(*a, **kw)
+
+    t.append_deltas = hook
+    batch = [("u", d, 100 + i) for i, d in enumerate(keys)] + [("u", "zz", 200)]
+    stats = apply_batch(
+        t, _events(spark, batch), commit_key="p:1", write_mode="mor"
+    )
+    t.append_deltas = orig
+    assert stats["applied"] is True and fired["n"] == 1
+
+    want = {**{d: 100 + i for i, d in enumerate(keys)}, "zz": 200}
+    got = {r["doc_id"]: r["_lsn"] for r in t.read(spark).collect()}
+    assert got == want
+    # every key is reachable through its effective bucket
+    for b in sorted({eff(d) for d in want}):
+        found = {r["doc_id"] for r in t.read(spark, buckets=[b]).collect()}
+        assert {d for d in want if eff(d) == b} <= found, b
+    deltas = t.manifest()["deltas"]
+    assert deltas
+    for entry, files in deltas.items():
+        rows = spark.read.parquet(*[os.path.join(path, f) for f in files])
+        misplaced = {
+            r["doc_id"] for r in rows.select("doc_id").collect()
+        } - {d for d in want if eff(d) == int(entry)}
+        assert not misplaced, (entry, misplaced)
+
+
 def test_concurrent_splits_do_not_erase_each_other(spark, tmp_warehouse):
     """Two split_bucket calls racing: the loser's manifest_update
     carries a done-set computed from a stale base — without the layout
